@@ -40,8 +40,7 @@ object Similarity {
     * @return (query_id, vec_id, cos_sim, rank) with rank 1..k
     */
   /** Spread before interpreted per-row array math — see [[Dedup.spread]]
-    * (unconditional round-robin; `spark.graft.spread=false` disables on
-    * clusters whose scans are already wide).
+    * (unconditional round-robin).
     */
   private def spread(df: DataFrame): DataFrame = Dedup.spread(df)
 

@@ -92,38 +92,26 @@ object PipelineQueries {
     // parser, same checksum discipline, one task per arriving shard.
     // Oracle = the relational content of both batches.
     "q_stream_tar" -> ((s, d) => {
-      val baseDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_star_" + ProcessHandle.current().pid() + "_" +
-          Integer.toHexString(d.hashCode))
-      if (java.nio.file.Files.exists(baseDir)) deleteRecursively(baseDir)
-      val incoming = baseDir.resolve("incoming")
-      java.nio.file.Files.createDirectories(incoming)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"),
         col("n_chars").cast("long").as("n_chars"), col("text"))
-      def land(batch: DataFrame, tag: String): Unit = {
-        val stage = baseDir.resolve(s"stage_$tag").toString
-        graft.sources.TarShardStore.write(batch, stage, keyCol = "doc_id",
-          rowsPerShard = 100)
-        new java.io.File(stage).listFiles()
-          .filter(_.getName.endsWith(".tar")).sortBy(_.getName)
-          .foreach { f => java.nio.file.Files.move(f.toPath,
-            incoming.resolve(s"$tag-${f.getName}")) }
-      }
-      val sink = s"stream_tar_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      val stream = graft.sources.TarShardStore.readStream(
-        s, incoming.toString, docs.schema, "doc_id")
-      graft.streaming.StreamTune.withStatePartitions(s,
-        graft.streaming.StreamTune.dirBytes(s"$d/documents.parquet")) {
-      val q = stream.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
+      graft.streaming.StreamGate.feedDir { baseDir =>
+        val incoming = baseDir.resolve("incoming")
+        java.nio.file.Files.createDirectories(incoming)
+        def land(batch: DataFrame, tag: String): Unit = {
+          val stage = baseDir.resolve(s"stage_$tag").toString
+          graft.sources.TarShardStore.write(batch, stage, keyCol = "doc_id",
+            rowsPerShard = 100)
+          new java.io.File(stage).listFiles()
+            .filter(_.getName.endsWith(".tar")).sortBy(_.getName)
+            .foreach { f => java.nio.file.Files.move(f.toPath,
+              incoming.resolve(s"$tag-${f.getName}")) }
+        }
         land(docs.filter(col("doc_id") % 2 === 0), "b0")
-        q.processAllAvailable()
-        land(docs.filter(col("doc_id") % 2 =!= 0), "b1")
-        q.processAllAvailable()
-      } finally q.stop()
-      }
-      s.table(sink).orderBy("doc_id")
+        graft.streaming.StreamGate.drain(s, baseDir,
+          epochs = Seq(() => land(docs.filter(col("doc_id") % 2 =!= 0), "b1")))(
+          graft.sources.TarShardStore.readStream(
+            s, incoming.toString, docs.schema, "doc_id"))
+      }.orderBy("doc_id")
     }),
 
     // declarative data-quality contract over the corpus, every check
@@ -302,25 +290,14 @@ object PipelineQueries {
       import graft.operators.DataChecks._
       val docs = Tables.documents(s, d)
         .select("doc_id", "text", "lang", "n_chars")
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_checks")
-      val sink = s"stream_checks_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(docs.schema).parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = run(src, Seq(
-            SizeAtLeast(1),
-            Completeness("text", 1.0),
-            ValueRange("n_chars", 0, 1e9),
-            MeanBetween("n_chars", 1, 100000),
-            PatternRate("lang", "^[a-z]{2}$", 0.5)))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink).orderBy("check", "col_name")
+      graft.streaming.StreamGate.run(s, Seq(docs), mode = "complete") {
+        case Seq(src) => run(src, Seq(
+          SizeAtLeast(1),
+          Completeness("text", 1.0),
+          ValueRange("n_chars", 0, 1e9),
+          MeanBetween("n_chars", 1, 100000),
+          PatternRate("lang", "^[a-z]{2}$", 0.5)))
+      }.orderBy("check", "col_name")
     }),
 
     // doc-to-doc kNN in sparse tf-idf space: inverted-index postings
@@ -402,24 +379,12 @@ object PipelineQueries {
       val imgs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), mk(col("doc_id")).as("media"),
           timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_image")
-      val sink = s"stream_image_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        imgs.coalesce(1).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingIngest
-            .imageDedupStream(src, "ts", "media")
-            .select("id", "dhash_hi", "dhash_lo")
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink).orderBy("id")
+      graft.streaming.StreamGate.run(s,
+          Seq(imgs.coalesce(1).sortWithinPartitions("id"))) {
+        case Seq(src) => graft.streaming.StreamingIngest
+          .imageDedupStream(src, "ts", "media")
+          .select("id", "dhash_hi", "dhash_lo")
+      }.orderBy("id")
     }),
 
     // next-event-prediction windows from the event log: per user,
@@ -523,33 +488,15 @@ object PipelineQueries {
       // the same counter state (explode is stateless, so the streamed
       // aggregation is identical)
       val docs = Tables.documents(s, d).select(col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_cms")
-      val sink = s"stream_cms_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-          .select(explode(graft.operators.TextOps.tokens(lower(col("text"))))
-            .as("term"))
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.operators.Sketches.cmsCounters(src, col("term"))
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("complete").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink)
+      graft.streaming.StreamGate.run(s, Seq(docs), mode = "complete") {
+        case Seq(src) => graft.operators.Sketches.cmsCounters(
+          src.select(explode(graft.operators.TextOps.tokens(lower(col("text"))))
+            .as("term")), col("term"))
+      }
         .select(col("__r").as("r"), col("__bkt").as("bkt"), col("cnt"))
         .orderBy("r", "bkt")
     })
   )
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
 
   val oracles: Map[String, String] = Map(
     "q_tfrecord_roundtrip" ->

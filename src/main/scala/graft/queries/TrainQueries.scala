@@ -99,22 +99,11 @@ object TrainQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_dedup")
-      val sink = s"stream_dedup_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingIngest.exactDedupStream(src, "ts", "text")
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink).select("doc_id").orderBy("doc_id")
+      graft.streaming.StreamGate.run(s,
+          Seq(docs.coalesce(1).sortWithinPartitions("doc_id"))) {
+        case Seq(src) =>
+          graft.streaming.StreamingIngest.exactDedupStream(src, "ts", "text")
+      }.select("doc_id").orderBy("doc_id")
     }),
 
     // The whole streaming curation front door under one hash oracle:
@@ -127,23 +116,11 @@ object TrainQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_curate")
-      val sink = s"stream_curate_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingIngest.curateStream(
-              src, "ts", "text", minQuality = 0.5)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink).select("doc_id").orderBy("doc_id")
+      graft.streaming.StreamGate.run(s,
+          Seq(docs.coalesce(1).sortWithinPartitions("doc_id"))) {
+        case Seq(src) => graft.streaming.StreamingIngest.curateStream(
+          src, "ts", "text", minQuality = 0.5)
+      }.select("doc_id").orderBy("doc_id")
     }),
 
     // The streaming twin of q_dedup_simhash under the SAME oracle: one
@@ -156,24 +133,11 @@ object TrainQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           timestamp_seconds(lit(1700000000L) + col("doc_id")).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_neardup")
-      val sink = s"stream_neardup_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingNearDup
-            .simhashPairsStream(src, "ts", "doc_id", "text", maxHamming = 3)
-            .toDF()
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink)
+      graft.streaming.StreamGate.run(s,
+          Seq(docs.coalesce(1).sortWithinPartitions("doc_id"))) {
+        case Seq(src) => graft.streaming.StreamingNearDup
+          .simhashPairsStream(src, "ts", "doc_id", "text", maxHamming = 3).toDF()
+      }
         .select(col("id_a"), col("id_b"), col("hamming"))
         .distinct()
         .orderBy("id_a", "id_b")
@@ -281,20 +245,11 @@ object TrainQueries {
     // batch relation — no watermark, no state, nothing order-dependent.
     "q_stream_decontam" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_decontam")
-      val sink = s"stream_decontam_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.filter(col("doc_id") >= 10).select(col("doc_id"), col("text"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        val q = graft.streaming.StreamingIngest.decontaminateStream(
-            src, docs.filter(col("doc_id") < 10), "text", k = 4, w = 5)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try { q.processAllAvailable() } finally { q.stop() }
-      } finally deleteRecursively(tmp)
-      s.table(sink).select("doc_id").orderBy("doc_id")
+      graft.streaming.StreamGate.run(s,
+          Seq(docs.filter(col("doc_id") >= 10).select(col("doc_id"), col("text")))) {
+        case Seq(src) => graft.streaming.StreamingIngest.decontaminateStream(
+          src, docs.filter(col("doc_id") < 10), "text", k = 4, w = 5)
+      }.select("doc_id").orderBy("doc_id")
     }),
 
     // Efraimidis–Spirtakis weighted sample (log-domain keys), weight =
@@ -557,20 +512,11 @@ object TrainQueries {
       // q_stream_cms) — the HLL registers see the same (group, value)
       // multiset, so the sketch state is identical
       val docs = Tables.documents(s, d).select(col("source"), col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_hll")
-      val sink = s"stream_hll_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-          .select(col("source").as("group"),
-            explode(TextOps.tokens(lower(col("text")))).as("value"))
-        val q = graft.streaming.StreamingSketches.hllDistinctStream(src)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").start()
-        try { q.processAllAvailable() } finally { q.stop() }
-      } finally deleteRecursively(tmp)
-      s.table(sink)
+      graft.streaming.StreamGate.run(s, Seq(docs), mode = "update") {
+        case Seq(src) => graft.streaming.StreamingSketches.hllDistinctStream(
+          src.select(col("source").as("group"),
+            explode(TextOps.tokens(lower(col("text")))).as("value"))).toDF()
+      }
         .join(graft.core.SkewOps.distinctCountByKey(
           Tables.documents(s, d).select(col("source"),
             explode(TextOps.tokens(lower(col("text")))).as("term")),
@@ -1691,13 +1637,6 @@ object TrainQueries {
       |      ORDER BY doc_id) AS rn
       |  FROM documents)
       |SELECT doc_id FROM fp WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   private val shingleSql =
     """toks AS (

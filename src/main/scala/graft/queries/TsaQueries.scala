@@ -177,7 +177,7 @@ object TsaQueries {
       else {
         // evicting pins DISK, not just frames — delete the old store or
         // a session-cycling harness accumulates obs copies in /tmp
-        if (cur != null) deleteRecursively(java.nio.file.Paths.get(cur._2))
+        if (cur != null) graft.sources.NioStoreFs.deleteRecursively(cur._2)
         val path = java.nio.file.Files.createTempDirectory("graft_obs_store").toString
         PartitionedStore.writeByDay(obsFromEvents(s, d), path)
         storeCache.set(((s, d), path))
@@ -200,13 +200,6 @@ object TsaQueries {
   val fixtureBackedQueries: Set[String] =
     Set("q_condition_eval", "q_condition_secondary", "q_condition_summary",
       "q_obs_pruned")
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // R3-R8: the pack_ranges kernel, three blocks in one pass.
@@ -235,21 +228,9 @@ object TsaQueries {
       val tagged = PackRanges.tagKeyed(obsFromEvents(s, d), blocks)
         .select(col("block_id"), col("tfrom"),
           coalesce(col("istrue").cast("int"), lit(-1)).as("enc"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_pack")
-      val sink = s"stream_pack_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        tagged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.StreamingPack.packStream(src, MaxMinutes)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink)
+      graft.streaming.StreamGate.run(s, Seq(tagged)) { case Seq(src) =>
+        graft.streaming.StreamingPack.packStream(src, MaxMinutes).toDF()
+      }
         .select(col("blockId").as("block_id"),
           timestamp_micros(col("vfrom")).as("vfrom"),
           timestamp_micros(col("vuntil")).as("vuntil"),
@@ -271,26 +252,10 @@ object TsaQueries {
       val errors = ev.filter(col("event_type") === "error")
         .groupBy(col("user_id").as("key"), col("ts"))
         .agg(max("value").as("value"))
-      val tmpR = java.nio.file.Files.createTempDirectory("q_stream_asof_r")
-      val tmpS = java.nio.file.Files.createTempDirectory("q_stream_asof_s")
-      val sink = s"stream_asof_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        errors.coalesce(1).write.mode("overwrite").parquet(tmpS.toString)
-        clicks.coalesce(1).write.mode("overwrite").parquet(tmpR.toString)
-        val rSrc = s.readStream.schema(s.read.parquet(tmpR.toString).schema)
-          .parquet(tmpR.toString)
-        val sSrc = s.readStream.schema(s.read.parquet(tmpS.toString).schema)
-          .parquet(tmpS.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmpR.toString) +
-            graft.streaming.StreamTune.dirBytes(tmpS.toString)) {
-          val q = graft.streaming.StreamingAsof.asofStream(rSrc, sSrc).toDF()
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally { deleteRecursively(tmpR); deleteRecursively(tmpS) }
-      s.table(sink)
+      graft.streaming.StreamGate.run(s, Seq(errors, clicks)) {
+        case Seq(sSrc, rSrc) =>
+          graft.streaming.StreamingAsof.asofStream(rSrc, sSrc).toDF()
+      }
         .select(col("key").as("user_id"), timestamp_micros(col("ts")).as("ts"),
           col("reading").as("click_val"), col("state_value").as("err_val"))
         .orderBy("user_id", "ts", "click_val")
@@ -310,28 +275,10 @@ object TsaQueries {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
           col("event_id").as("click_id"))
-      val tmpV = java.nio.file.Files.createTempDirectory("q_stream_join_v")
-      val tmpC = java.nio.file.Files.createTempDirectory("q_stream_join_c")
-      val sink = s"stream_join_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        views.coalesce(1).write.mode("overwrite").parquet(tmpV.toString)
-        clicks.coalesce(1).write.mode("overwrite").parquet(tmpC.toString)
-        val vSrc = s.readStream.schema(s.read.parquet(tmpV.toString).schema)
-          .parquet(tmpV.toString)
-        val cSrc = s.readStream.schema(s.read.parquet(tmpC.toString).schema)
-          .parquet(tmpC.toString)
-        // state partitions sized from the feeds, not the batch default
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmpV.toString) +
-            graft.streaming.StreamTune.dirBytes(tmpC.toString)) {
-          val q = graft.streaming.StreamingJoin
-            .attributionJoin(vSrc, cSrc, "6 hours")
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally { deleteRecursively(tmpV); deleteRecursively(tmpC) }
-      s.table(sink).orderBy("user_id", "view_id", "click_id")
+      graft.streaming.StreamGate.run(s, Seq(views, clicks)) {
+        case Seq(vSrc, cSrc) =>
+          graft.streaming.StreamingJoin.attributionJoin(vSrc, cSrc, "6 hours")
+      }.orderBy("user_id", "view_id", "click_id")
     }),
 
     // Streaming sessionization under the batch oracle: session_window
@@ -340,35 +287,19 @@ object TsaQueries {
     // then the sentinel's user is filtered back out.
     "q_stream_sessions" -> ((s, d) => {
       val ev = graft.sources.Tables.events(s, d).select(col("user_id"), col("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_sessions")
-      val sink = s"stream_sessions_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        ev.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val src = s.readStream.schema(s.read.parquet(tmp.toString).schema)
-          .parquet(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-        val q = src.withWatermark("ts", "1 minute")
+      // sentinel epoch: pushes the watermark past every session
+      import s.implicits._
+      val sentinel = Seq((-1L, new java.sql.Timestamp(4102444800000L)))
+        .toDF("user_id", "ts")
+      graft.streaming.StreamGate.run(s, Seq(ev), sentinel = Some(sentinel)) {
+        case Seq(src) => src.withWatermark("ts", "1 minute")
           .groupBy(col("user_id"),
             session_window(col("ts"), "2 hours").as("sw"))
           .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
             count(lit(1)).as("n_events"))
           .select(col("user_id"), col("session_start"), col("session_end"),
             col("n_events"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          q.processAllAvailable()
-          // sentinel batch: pushes the watermark past every session
-          import s.implicits._
-          Seq((-1L, new java.sql.Timestamp(4102444800000L)))
-            .toDF("user_id", "ts")
-            .coalesce(1).write.mode("append").parquet(tmp.toString)
-          q.processAllAvailable()
-        } finally q.stop()
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink).filter(col("user_id") >= 0)
+      }.filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     }),
 
@@ -394,20 +325,12 @@ object TsaQueries {
           array(struct(col("user_id").as("id"),
             lit("2026-01-01T00:00:00Z").as("dataUpdatedTime"),
             col("svs").as("sensorValues"))).as("stations"))
-      val tmp = java.nio.file.Files.createTempDirectory("q_stream_roadweather")
-      val sink = s"roadweather_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      try {
-        payloads.coalesce(4).write.mode("overwrite").json(tmp.toString)
-        graft.streaming.StreamTune.withStatePartitions(s,
-          graft.streaming.StreamTune.dirBytes(tmp.toString)) {
-          val q = graft.streaming.DigitrafficSource
-            .sensorDataStreamLines(s, tmp.toString, "2 hours")
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append").start()
-          try { q.processAllAvailable() } finally { q.stop() }
-        }
-      } finally deleteRecursively(tmp)
-      s.table(sink)
+      graft.streaming.StreamGate.feedDir { dir =>
+        val feed = dir.resolve("payloads").toString
+        payloads.coalesce(4).write.json(feed)
+        graft.streaming.StreamGate.drain(s, dir)(
+          graft.streaming.DigitrafficSource.sensorDataStreamLines(s, feed, "2 hours"))
+      }
         .select(col("tfrom"), col("statid"), col("seid"), col("sename"),
           col("seval"))
         .orderBy("seid")

@@ -2648,6 +2648,13 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
                      bucketN: Option[Int] = None,
                      renames: Vector[Rename] = Vector.empty,
                      props: Map[String, String] = Map.empty): Staged = {
+    // parsed before anything is written: "FALSE" forces the scan path,
+    // a malformed value throws instead of being silently ignored
+    val footerStatsOn = {
+      val v = spark.conf.get("spark.graft.store.footerStats", "true")
+      v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.store.footerStats must be true or false, got '$v'"))
+    }
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     // scratch lives UNDER the store root — the hop into data/ below
     // is then same-filesystem by construction (an atomic move from
@@ -2686,39 +2693,21 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
           .write.mode(SaveMode.Overwrite).partitionBy("__b").parquet(tmp)
       case None =>
         // repartitionByRange derives its range bounds from a SAMPLING
-        // JOB over its child — without intervention the child (a
-        // merge's read+anti-join+union pipeline, a compaction's full
-        // table read) executes TWICE per commit: once for the sample,
-        // once for the shuffle map stage. Persist the child for the
-        // duration of the write so both passes read materialized
-        // blocks; the range layout itself (filesPerCommit files, tight
-        // per-file envelopes — what the pruning gates REQUIRE) is
-        // unchanged because the same rows feed the same partitioner.
-        // MEMORY_AND_DISK: a commit's rewrite set is change-set-sized
-        // (hit files + batch), not table-sized, and spills rather than
-        // recomputes. `spark.graft.store.writePersist=false` restores
-        // the unpersisted shape.
-        val persistWrite = java.lang.Boolean.parseBoolean(
-          spark.conf.get("spark.graft.store.writePersist", "false"))
-        val src = layout match {
-          case None => aligned
+        // JOB over its child, so the child (a merge's read+anti-join+
+        // union pipeline, a compaction's full table read) executes
+        // TWICE per commit: once for the sample, once for the shuffle
+        // map stage. That second pass is an open cost: persisting the
+        // child measured slower; deriving the bounds from the delta's
+        // own footer or manifest stats would avoid the sample.
+        val clustered = layout match {
+          case None => aligned.repartitionByRange(filesPerCommit, col(keyCol))
+            .sortWithinPartitions(keyCol)
           case Some(z) => aligned.withColumn("__layout", z)
+            .repartitionByRange(filesPerCommit, col("__layout"))
+            .sortWithinPartitions("__layout")
+            .drop("__layout")
         }
-        val pinned =
-          if (persistWrite)
-            src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else src
-        try {
-          val clustered = layout match {
-            case None => pinned.repartitionByRange(filesPerCommit, col(keyCol))
-              .sortWithinPartitions(keyCol)
-            case Some(_) => pinned
-              .repartitionByRange(filesPerCommit, col("__layout"))
-              .sortWithinPartitions("__layout")
-              .drop("__layout")
-          }
-          clustered.write.mode(SaveMode.Overwrite).parquet(tmp)
-        } finally if (persistWrite) pinned.unpersist(blocking = false)
+        clustered.write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     val destRel = if (staged) s"$stagePrefix$uuid" else "data"
     fs.mkdirs(s"$root/$destRel")
@@ -2761,9 +2750,7 @@ class SnapshotStoreOps(protected val fs: StoreFs) {
     // scan path unchanged — `spark.graft.store.footerStats=false`
     // forces the scan.
     val footerStats: Option[Vector[FileEntry]] =
-      if (moved.isEmpty || bloomBits > 0 ||
-          spark.conf.get("spark.graft.store.footerStats", "true") == "false")
-        None
+      if (moved.isEmpty || bloomBits > 0 || !footerStatsOn) None
       else {
         import org.apache.spark.sql.types._
         val integral = (keyCol +: statsCols).forall(c =>

@@ -35,4 +35,18 @@ class ContractSpec extends AnyFunSuite {
     assert(maps.flatMap(_.keys).distinct.size == total,
       "duplicate query name across Relational/TsaQueries/TrainQueries/PipelineQueries/CurationQueries")
   }
+
+  test("memory-sink stream gates go through the one StreamGate harness") {
+    val files = new java.io.File("src/main/scala/graft/queries").listFiles()
+      .filter(_.getName.endsWith(".scala"))
+    assert(files.nonEmpty, "queries/ sources not found")
+    val offenders = for {
+      f <- files.toSeq
+      src = scala.util.Using.resource(scala.io.Source.fromFile(f))(_.mkString)
+      pattern <- Seq("format(\"memory\")", "createTempDirectory(\"q_stream")
+      if src.contains(pattern)
+    } yield s"${f.getName}: $pattern"
+    assert(offenders.isEmpty,
+      s"stream-gate lifecycle outside StreamGate: ${offenders.mkString(", ")}")
+  }
 }

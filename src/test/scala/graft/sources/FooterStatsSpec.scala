@@ -44,6 +44,44 @@ class FooterStatsSpec extends AnyFunSuite with SparkTest {
       .count() == 100L)
   }
 
+  /** Spark jobs one commit runs with the footerStats knob at `value`:
+    * the scan path runs a stats job the footer path does not.
+    */
+  private def commitJobs(tag: String, value: String): Int = {
+    val sc = spark.sparkContext
+    spark.conf.set("spark.graft.store.footerStats", value)
+    sc.setJobGroup(tag, tag)
+    try SnapshotStore.init(spark, base, freshRoot(tag), "k",
+      statsCols = Seq("z"), filesPerCommit = 4)
+    finally { sc.clearJobGroup(); spark.conf.unset("spark.graft.store.footerStats") }
+    // the status store fills from the listener bus in order: once a
+    // later job shows up, every job of the commit has
+    sc.setJobGroup(s"${tag}_end", "")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"${tag}_end").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    sc.statusTracker.getJobIdsForGroup(tag).length
+  }
+
+  test("footerStats parses case-insensitively: FALSE forces the scan") {
+    val footer = commitJobs("jobs_true", "true")
+    val scan = commitJobs("jobs_false", "false")
+    assert(scan > footer)
+    assert(commitJobs("jobs_FALSE", "FALSE") == scan)
+  }
+
+  test("a malformed footerStats value throws before anything is written") {
+    val root = freshRoot("malformed")
+    spark.conf.set("spark.graft.store.footerStats", "off")
+    val e = try intercept[IllegalArgumentException](
+      SnapshotStore.init(spark, base, root, "k", statsCols = Seq("z")))
+    finally spark.conf.unset("spark.graft.store.footerStats")
+    assert(e.getMessage.contains("spark.graft.store.footerStats"))
+    assert(!new java.io.File(s"$root/.tmp").exists() &&
+      new java.io.File(s"$root/data").listFiles().isEmpty)
+  }
+
   test("footer path refuses NULL keys exactly like the scan path") {
     val root = freshRoot("nulls")
     val bad = base.unionByName(Seq((null.asInstanceOf[java.lang.Long], 1L, "x"))
