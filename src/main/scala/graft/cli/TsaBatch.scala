@@ -166,6 +166,8 @@ object TsaBatch {
               s.getAs[Long]("nodata_s"), s.getAs[Long]("tottime_s"),
               s.getAs[Double]("percent_valid"), s.getAs[Double]("percent_notvalid"),
               s.getAs[Double]("percent_nodata"), s.getAs[Long]("n_rows")).mkString(",")
+            // r.data is the engine's cached result, built by the summary
+            // collect above: this write and the timeline collect read it
             // full per-range result parquet per condition — coalesced:
             // a condition's ranges are run-length compressed (thousands
             // of rows), and on a local filesystem every output file

@@ -18,8 +18,9 @@ import scala.collection.mutable
   *   - ALL primary blocks of the whole collection packed in ONE
   *     observation pass (broadcast key tagging + window partitioned by
   *     block id) instead of one Postgres call per block;
-  *   - condition results cached (the reference's temp tables) only when a
-  *     secondary condition actually references them.
+  *   - every condition result cached once on the executors (the
+  *     reference's temp tables) and read by its summary, every sink and
+  *     every secondary reference; [[release]] bounds what outlives a sheet.
   */
 /** @param packChunkHours time-chunk width for the skew-resistant pack
   *   (one week by default): readings are packed within (block, chunk)
@@ -185,9 +186,6 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
 
     // Evaluate in topo order; register results for secondary refs.
     val results = Vector.newBuilder[ConditionResult]
-    val referenced: Set[String] = runnable.flatMap(_.blocks.collect {
-      case s: SecondaryBlock => s.sourceView
-    }).toSet
 
     for (spec <- order) {
       val errs = errsOf(spec)
@@ -213,14 +211,11 @@ final class TsaEngine(spark: SparkSession, maxMinutes: Int = 30,
               }
           }
           val blockRanges = parts.reduce(_ union _)
-          var data = ConditionEval.evalCondition(
-            blockRanges, spec.blocks.map(_.alias), spec.expr)
-          // Materialize only what secondary conditions will re-read —
-          // the reference's temp tables (tsa/condition.py:329-338).
-          if (referenced.contains(spec.idString)) {
-            data = data.cache()
-            persisted += data
-          }
+          // the reference's temp table (tsa/condition.py:329-338): the
+          // first action builds it, every later reader shares it
+          val data = ConditionEval.evalCondition(
+            blockRanges, spec.blocks.map(_.alias), spec.expr).cache()
+          persisted += data
           catalog(spec.idString) = data
           results += ConditionResult(spec, data, ConditionEval.summarize(data), errs)
         } catch {

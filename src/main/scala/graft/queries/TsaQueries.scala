@@ -364,8 +364,13 @@ object TsaQueries {
       val obs = PartitionedStore.prunedRange(
           PartitionedStore.read(s, partitionedObsPath(s, d)), "tfrom", from, until)
         .select("tfrom", "statid", "seid", "seval")
-      new TsaEngine(s, MaxMinutes).run(coll, obs, sensorIds)
-        .head.data.orderBy("vfrom")
+      // release before returning: the frame recomputes when acted on,
+      // and an engine cache left behind would let the CacheManager serve
+      // a later identical run (the bench's second iteration) pre-cached
+      val engine = new TsaEngine(s, MaxMinutes)
+      val out = engine.run(coll, obs, sensorIds).head.data.orderBy("vfrom")
+      engine.release()
+      out
     }),
 
     // A2-A5: summary scalars.

@@ -52,6 +52,46 @@ class TsaBatchSpec extends AnyFunSuite with SparkTest {
       Seq("vfrom", "vuntil", "vdiff_s", "a1_0", "a1_1", "master"))
   }
 
+  test("cross-sheet secondary reference: summary, plots, no cache left behind") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tsabatch_xsheet")
+    val t0 = java.time.Instant.parse("2018-02-01T00:00:00Z")
+    val rows = for {
+      h <- 0 until 24 * 10
+      (seid, v) <- Seq(27 -> (if (h % 3 == 0) 8.0 else 2.0),
+                       3 -> (if (h % 2 == 0) -2.0 else 1.0))
+    } yield (java.sql.Timestamp.from(t0.plusSeconds(h * 3600L)), 1120L, seid.toLong, v)
+    val obsPath = dir.resolve("obs.parquet").toString
+    rows.toDF("tfrom", "statid", "seid", "seval").write.parquet(obsPath)
+    val out = dir.resolve("out").toString
+    Files.createDirectories(Paths.get(out))
+    def sheet(body: String) =
+      s""""start","end"
+        |"1.2.2018","28.2.2018"
+        |"site","master_alias","condition"
+        |$body
+        |""".stripMargin
+    spark.sharedState.cacheManager.clearCache()
+    TsaBatch.run(spark, Vector(
+        "s1" -> sheet(""""Testi","A1","s1120#keli_1 = 8 and s1120#tie_1 < 0""""),
+        "s2" -> sheet(""""Toinen","B1","not testi#a1"""")),
+      obsPath, out, "xs", png = true)
+
+    val summary = Files.readAllLines(Paths.get(s"$out/xs_summary.csv"))
+    assert(summary.size == 3, summary)
+    val split = ",(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)"
+    val Seq(a1, b1) = (1 to 2).map(i => summary.get(i).split(split))
+    assert(a1(0) == "s1" && a1(2) == "a1" && b1(0) == "s2" && b1(2) == "b1")
+    // NOT of sheet 1's master: valid/notvalid swap, nodata stays
+    assert(a1(6).toLong > 0 && a1(7).toLong > 0)
+    assert(b1(6) == a1(7) && b1(7) == a1(6) && b1(8) == a1(8))
+    // one plot per condition with data
+    val pngs = Paths.get(s"$out/plots").toFile.list().filter(_.endsWith(".png")).toSet
+    assert(pngs == Set("s1_testi_a1.png", "s2_toinen_b1.png"), pngs)
+    // every condition is cached, and the last sheet's release frees all
+    assert(spark.sharedState.cacheManager.isEmpty, "TsaBatch.run left a cache behind")
+  }
+
   test("--log configures level and writes the per-run log file") {
     val dir = Files.createTempDirectory("tsabatch_log")
     val sheets = dir.resolve("sheets"); Files.createDirectories(sheets)

@@ -41,9 +41,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
   }
 
   test("q_obs_pruned: collection range reaches the store's directory listing") {
-    // simple mode, not formatted: the store scan sits inside the
-    // engine's InMemoryRelation, whose child plan formatted mode shows
-    // only as a tree (no per-node detail section)
+    // the gate releases its engine before returning, so the store scan
+    // is planned directly, not inside an engine InMemoryRelation
     val plan = graft.SparkEntry.queries("q_obs_pruned")(spark, sf)
       .queryExecution.executedPlan.toString
     // the date-partitioned store scan must carry non-empty

@@ -96,11 +96,19 @@ class ReleaseSpec extends AnyFunSuite with SparkTest {
     val engine = new TsaEngine(spark)
     val results = run(engine)
     results.foreach(r => r.data.count()) // materialize (populates caches)
-    // packed + the referenced a1 are cached
-    assert(!spark.sharedState.cacheManager.isEmpty)
+    // packed and every condition result are cached — b1, which no
+    // condition references, as much as the referenced a1
+    val byId = results.map(r => r.spec.idString -> r.data).toMap
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      spark.sharedState.cacheManager
+        .lookupCachedData(org.apache.spark.sql.classic.ClassicConversions.castToImpl(df))
+        .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+    assert(cached(byId("testi_a1")) && cached(byId("testi_b1")))
     assert(engine.catalog.keySet == Set("testi_a1", "testi_b1"))
 
     engine.release(keep = Set("testi_a1"))
+    assert(byId("testi_b1").storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(cached(byId("testi_a1")))
     // kept entry still answers from the catalog...
     assert(engine.catalog.keySet == Set("testi_a1"))
     assert(engine.catalog("testi_a1").count() > 0)

@@ -48,20 +48,10 @@ class FooterStatsSpec extends AnyFunSuite with SparkTest {
     * the scan path runs a stats job the footer path does not.
     */
   private def commitJobs(tag: String, value: String): Int = {
-    val sc = spark.sparkContext
     spark.conf.set("spark.graft.store.footerStats", value)
-    sc.setJobGroup(tag, tag)
-    try SnapshotStore.init(spark, base, freshRoot(tag), "k",
-      statsCols = Seq("z"), filesPerCommit = 4)
-    finally { sc.clearJobGroup(); spark.conf.unset("spark.graft.store.footerStats") }
-    // the status store fills from the listener bus in order: once a
-    // later job shows up, every job of the commit has
-    sc.setJobGroup(s"${tag}_end", "")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup(s"${tag}_end").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-    sc.statusTracker.getJobIdsForGroup(tag).length
+    try jobsIn(tag)(SnapshotStore.init(spark, base, freshRoot(tag), "k",
+      statsCols = Seq("z"), filesPerCommit = 4))
+    finally spark.conf.unset("spark.graft.store.footerStats")
   }
 
   test("footerStats parses case-insensitively: FALSE forces the scan") {
